@@ -1562,7 +1562,8 @@ class LakeTable:
         files — the streaming pipeline runs it on a cadence.
 
         ``touched`` may be a list of bucket ids, a zero-arg callable
-        evaluated after the delta write (the pipeline's observe() hook),
+        evaluated after the delta write and before the commit (the
+        pipeline's join on its concurrent per-source-file aggregation),
         or None (a tiny distinct probe over the written delta).
 
         Appends NEVER conflict: a rebase just re-targets the new head's
@@ -1613,8 +1614,9 @@ class LakeTable:
             return None  # nothing survived the filter (all-late/bad batch)
         if callable(touched):
             # the streaming pipeline derives the touched set from an
-            # observe() on the write job above — evaluated here, after
-            # that job ran, so it costs nothing extra
+            # aggregation running alongside the write job above — joined
+            # here, after the write and before the commit, so its failure
+            # fails the batch with nothing committed
             touched = touched()
         if touched is None:
             # tiny probe over the just-written delta (bounded by batch

@@ -34,9 +34,11 @@ import json
 import os
 import sys
 import time
+from concurrent.futures import Future
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import InheritableThread
 
 from ..fsio import FsIO
 from ..fsio import join as fsio_join
@@ -77,6 +79,45 @@ def build_parse_exprs(keep: list[str]) -> tuple[list, list]:
         *[F.col(c) for c in keep],
     ]
     return parse_cols, norm_cols
+
+
+def _n_events(r) -> int:
+    """Events of one per-source-file aggregate row that reach the sink:
+    every row minus the bad, late, DDL and transaction-marker ones."""
+    return int(r["total"] or 0) - sum(
+        int(r[k] or 0) for k in ("n_bad", "n_late", "n_ddl", "n_marker")
+    )
+
+
+def _batch_counts(per_file) -> dict:
+    """Batch metrics summed over the per-source-file aggregate rows."""
+    total = lambda k: sum(int(r[k] or 0) for r in per_file)  # noqa: E731
+    return {
+        "n_events": sum(_n_events(r) for r in per_file),
+        "n_late": total("n_late"),
+        "n_dlq": total("n_bad"),
+        "n_ddl": total("n_ddl"),
+    }
+
+
+def _touched(per_file) -> list[int]:
+    return sorted({int(b) for r in per_file for b in (r["buckets"] or [])})
+
+
+def _in_thread(fn) -> Future:
+    """Run ``fn`` on a daemon thread that inherits the caller's Spark
+    local properties (job group, job description), so its jobs belong to
+    the caller's micro-batch. The Future holds its result or its error."""
+    fut: Future = Future()
+
+    def run() -> None:
+        try:
+            fut.set_result(fn())
+        except BaseException as e:  # re-raised by fut.result()
+            fut.set_exception(e)
+
+    InheritableThread(target=run, daemon=True).start()
+    return fut
 
 
 class CdcPipeline:
@@ -156,8 +197,7 @@ class CdcPipeline:
         # quality_action="halt" fails the micro-batch on any failed check
         # so nothing commits (replay re-evaluates after the fix),
         # "record" logs verdicts + metrics and proceeds. Opt-in cost: ONE
-        # extra aggregate job per batch (a second batch scan on the fused
-        # append path, which otherwise stays at one job).
+        # extra aggregate job (one more batch scan) per batch.
         if quality_action not in ("record", "halt"):
             raise ValueError(
                 f"quality_action must be 'record' or 'halt', got {quality_action!r}"
@@ -289,8 +329,11 @@ class CdcPipeline:
         self._good = (
             ~F.col("_bad") & ~F.col("_late") & ~self._is_ddl & ~self._is_marker
         )
+        # the per-source-file aggregation both sink paths run once per
+        # batch: its rows are the single source of the batch counts, the
+        # lineage offset ranges, the watermark and the touched buckets
         _gw = lambda c: F.when(self._good, c)  # noqa: E731
-        self._obs_aggs = [
+        self._file_aggs = [
             F.count(F.lit(1)).alias("total"),
             F.sum(F.col("_bad").cast("long")).alias("n_bad"),
             F.sum(F.col("_late").cast("long")).alias("n_late"),
@@ -301,7 +344,6 @@ class CdcPipeline:
             F.max(_gw(F.col("source_pos"))).alias("max_pos"),
             F.min(_gw(F.col("seq"))).alias("min_seq"),
             F.max(_gw(F.col("seq"))).alias("max_seq"),
-            F.collect_set(_gw(F.col("source_file"))).alias("files"),
             F.collect_set(_gw(self.table._bucket_col(KEY_COLS[0]))).alias("buckets"),
         ]
         # payload column ORDER is fixed by the normalize schema above
@@ -649,18 +691,20 @@ class CdcPipeline:
 
         Driver-action budget per micro-batch (the fixed cost that
         serializes a thousands-of-batches stream): TWO Spark jobs — one
-        cached per-source-file aggregation that yields the batch metrics,
-        the lineage offset-range records, AND the touched-bucket set in a
-        single pass, then the merge/append itself (handed the touched set,
-        so it runs no probe of its own). Lineage rows are already on the
-        driver and append without a job; the optional DLQ write reads the
-        cache (pays only when bad rows exist).
+        per-source-file aggregation that yields the batch metrics, the
+        lineage offset-range records, the watermark AND the touched-bucket
+        set in a single pass, and the merge/append itself (handed the
+        touched set, so it runs no probe of its own). The merge path runs
+        the aggregation first, over a cached batch; the append path runs it
+        concurrently with its delta write. Lineage rows are already on the
+        driver and append without a job; the optional DLQ write pays only
+        when bad rows exist.
         """
         metrics = {"batch_id": batch_id, "n_events": 0, "n_late": 0, "n_dlq": 0, "n_ddl": 0, "version": None}
-        # Replay pre-check, driver-only (manifest head read): the fused
-        # append path must know before launching its single job — its
-        # observation is populated by that job, so short-circuiting later
-        # (as merge_events does internally) would leave nothing to await.
+        # Replay pre-check, driver-only (manifest head read): a committed
+        # batch returns before any Spark job starts (the sinks also
+        # short-circuit internally, but only after the append path has
+        # launched its aggregation).
         if batch_id is not None and self.table.exists():
             last = self.table._batch_id_of(self.table._manifest())
             if last is not None and batch_id <= last:
@@ -687,29 +731,18 @@ class CdcPipeline:
                 return metrics
         flagged = self._flag_batch(batch_df)
         gate_cache = None
-        gate_thread = None
-        gate_err: list[BaseException] = []
+        pending = None
         if self.txn_consistent and not self.txn_via_state:
-            import threading
-
             # cache the flagged batch across the gate's TWO consumers (the
             # pending-store write and the admitted side feeding the sink):
             # without it every gate job re-runs the batch scan + parse
             gate_cache = flagged.cache()
             flagged, persist_pending = self._txn_gate(gate_cache, batch_id)
-
-            def _run_persist() -> None:
-                try:
-                    persist_pending()
-                except BaseException as e:  # surfaced after join below
-                    gate_err.append(e)
-
             # overlap the pending-store write with the sink job: the two
             # actions are independent given the shared cache, so the
             # scheduler runs them side by side and the smaller job's wall
             # disappears instead of adding a full serial job per batch
-            gate_thread = threading.Thread(target=_run_persist, daemon=True)
-            gate_thread.start()
+            pending = _in_thread(persist_pending)
         try:
             # quality gate FIRST (inside the try so a halt still joins the
             # overlapped pending write and releases the batch cache):
@@ -733,79 +766,36 @@ class CdcPipeline:
                 metrics = self._apply_batch_merge(flagged, batch_id, metrics)
             return metrics
         finally:
-            if gate_thread is not None:
-                gate_thread.join()
-                if gate_err and sys.exc_info()[0] is None:
-                    # a lost pending generation is a correctness gap on
-                    # the NEXT batch — fail the micro-batch; replay
-                    # re-derives both sides (sink dedups by batch id).
-                    # (if the sink job itself raised, keep THAT error)
-                    raise gate_err[0]
+            gate_err = pending.exception() if pending is not None else None
             if gate_cache is not None:
                 gate_cache.unpersist()
+            if gate_err is not None and sys.exc_info()[0] is None:
+                # a lost pending generation is a correctness gap on the
+                # NEXT batch — fail the micro-batch; replay re-derives
+                # both sides (sink dedups by batch id). (if the sink job
+                # itself raised, keep THAT error)
+                raise gate_err
 
     def _apply_batch_merge(self, flagged, batch_id: int, metrics: dict) -> dict:
         flagged = flagged.cache()
         try:
-            good = self._good
-
-            def gw(col):  # aggregate over good rows only (nulls are skipped)
-                return F.when(good, col)
-
-            per_file = flagged.groupBy("source_file").agg(
-                F.count("*").alias("total"),
-                F.sum(F.col("_bad").cast("long")).alias("n_bad"),
-                F.sum(F.col("_late").cast("long")).alias("n_late"),
-                F.sum((self._is_ddl & ~F.col("_bad")).cast("long")).alias("n_ddl"),
-                F.sum((self._is_marker & ~F.col("_bad")).cast("long")).alias("n_marker"),
-                F.max(gw(F.unix_timestamp("ts"))).alias("mx"),
-                F.min(gw(F.col("source_pos"))).alias("min_pos"),
-                F.max(gw(F.col("source_pos"))).alias("max_pos"),
-                F.min(gw(F.col("seq"))).alias("min_seq"),
-                F.max(gw(F.col("seq"))).alias("max_seq"),
-                F.collect_set(gw(self.table._bucket_col(KEY_COLS[0]))).alias("buckets"),
-            ).collect()
-            n_dlq = sum(int(r["n_bad"] or 0) for r in per_file)
-            n_late = sum(int(r["n_late"] or 0) for r in per_file)
-            n_ddl = sum(int(r["n_ddl"] or 0) for r in per_file)
-            n_marker = sum(int(r["n_marker"] or 0) for r in per_file)
-            n_events = (
-                sum(int(r["total"] or 0) for r in per_file)
-                - n_dlq - n_late - n_ddl - n_marker
-            )
-            metrics.update(n_events=n_events, n_late=n_late, n_dlq=n_dlq, n_ddl=n_ddl)
+            per_file = self._per_file(flagged)
+            metrics.update(_batch_counts(per_file))
+            n_events, n_ddl = metrics["n_events"], metrics["n_ddl"]
             ddl_cols = self._collect_ddl(flagged) if n_ddl else {}
             if ddl_cols and self.table.exists():
                 # schema change lands BEFORE the batch's data (binlog order)
                 self.table.evolve(ddl_cols)
                 ddl_cols = {}
-            if n_dlq:
-                (
-                    flagged.filter(F.col("_bad"))
-                    .select(
-                        F.lit(batch_id).cast("long").alias("batch_id"),
-                        "payload_json",
-                        "source_file",
-                        "source_pos",
-                        F.lit("unparseable-or-missing-key").alias("reason"),
-                    )
-                    .coalesce(1)
-                    .write.mode("append")
-                    .parquet(fsio_join(self.table_path, "_dlq"))
-                )
+            if metrics["n_dlq"]:
+                self._write_dlq(flagged, batch_id)
             if n_events == 0:
                 if ddl_cols and self.table.exists():  # pure-DDL batch
                     self.table.evolve(ddl_cols)
                 return metrics
-            touched = sorted({b for r in per_file for b in (r["buckets"] or [])})
-            mxs = [r["mx"] for r in per_file if r["mx"] is not None]
-
-            events = flagged.filter(good)
-            payload = events.select(
-                "seq", "op", "ts", *KEY_COLS,
-                *[c for c in events.columns if c not in ("seq", "op", "ts", *KEY_COLS, "source_file", "source_pos", "payload_json", "txn_id", "_bad", "_late")],
-            )
-            summary = {"n_events": n_events, "n_late": n_late}
+            touched = _touched(per_file)
+            payload = self._payload(flagged)
+            summary = {"n_events": n_events, "n_late": metrics["n_late"]}
             # Fold strategy (see laketable.merge_events + operators/ordering):
             # "salted" = explicit two-phase salted fold for extreme hot keys;
             # "prefold" = map-side partial LWW fold (shuffle O(keys));
@@ -832,34 +822,70 @@ class CdcPipeline:
                 # deferred DDL now (additive, so order vs data is benign)
                 self.table.evolve(ddl_cols)
             if version is not None:
-                committed_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-                write_lineage_rows(
-                    self.spark,
-                    [
-                        {
-                            "batch_id": int(batch_id),
-                            "snapshot_id": int(version),
-                            "source_file": r["source_file"],
-                            "min_pos": r["min_pos"],
-                            "max_pos": r["max_pos"],
-                            "min_seq": r["min_seq"],
-                            "max_seq": r["max_seq"],
-                            "n_events": int(r["total"]) - int(r["n_bad"] or 0) - int(r["n_late"] or 0) - int(r["n_ddl"] or 0) - int(r["n_marker"] or 0),
-                            "n_late": int(n_late),
-                            "committed_at": committed_at,
-                        }
-                        for r in per_file
-                        if int(r["total"]) - int(r["n_bad"] or 0) - int(r["n_late"] or 0) - int(r["n_ddl"] or 0) - int(r["n_marker"] or 0) > 0
-                    ],
-                    self.table_path,
-                )
-                if mxs:
-                    self._store_watermark(int(max(mxs)))
+                self._record_batch(per_file, batch_id, version, metrics)
                 self._maybe_expire(metrics)
                 self._maybe_refresh_mv(metrics)
         finally:
             flagged.unpersist()
         return metrics
+
+    def _per_file(self, flagged) -> list:
+        return flagged.groupBy("source_file").agg(*self._file_aggs).collect()
+
+    def _payload(self, flagged) -> DataFrame:
+        """The sink payload: the batch's good rows in the fixed column
+        order, flag and source-coordinate columns dropped."""
+        events = flagged.filter(self._good)
+        if self.from_json_payload:
+            return events.select(*self._payload_cols)
+        return events.select(
+            "seq", "op", "ts", *KEY_COLS,
+            *[c for c in events.columns if c not in ("seq", "op", "ts", *KEY_COLS, "source_file", "source_pos", "payload_json", "txn_id", "_bad", "_late")],
+        )
+
+    def _write_dlq(self, flagged, batch_id: int) -> None:
+        (
+            flagged.filter(F.col("_bad"))
+            .select(
+                F.lit(batch_id).cast("long").alias("batch_id"),
+                "payload_json",
+                "source_file",
+                "source_pos",
+                F.lit("unparseable-or-missing-key").alias("reason"),
+            )
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(fsio_join(self.table_path, "_dlq"))
+        )
+
+    def _record_batch(self, per_file, batch_id: int, version: int, metrics: dict) -> None:
+        """Post-commit side outputs of the per-file aggregate rows: one
+        lineage record per source file that applied events, then the
+        engine watermark."""
+        committed_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+        write_lineage_rows(
+            self.spark,
+            [
+                {
+                    "batch_id": int(batch_id),
+                    "snapshot_id": int(version),
+                    "source_file": r["source_file"],
+                    "min_pos": r["min_pos"],
+                    "max_pos": r["max_pos"],
+                    "min_seq": r["min_seq"],
+                    "max_seq": r["max_seq"],
+                    "n_events": n,
+                    "n_late": metrics["n_late"],
+                    "committed_at": committed_at,
+                }
+                for r in per_file
+                if (n := _n_events(r)) > 0
+            ],
+            self.table_path,
+        )
+        mxs = [r["mx"] for r in per_file if r["mx"] is not None]
+        if mxs:
+            self._store_watermark(int(max(mxs)))
 
     def _collect_ddl(self, flagged) -> dict:
         """Gather the batch's DDL statements (op='ddl', statement in
@@ -881,133 +907,51 @@ class CdcPipeline:
         return add
 
     def _apply_batch_fused(self, flagged, batch_id: int, metrics: dict) -> dict:
-        """Merge-on-read micro-batch with ONE Spark job: the delta-file
-        write. Batch metrics, lineage offset ranges, the touched-bucket
-        set, and the watermark all ride that job via ``observe()`` (a
-        CollectMetrics node in the same physical plan), so the per-batch
-        fixed cost is one job + one manifest commit — the shape that
-        bounds a thousand-batch stream. Multi-file batches pay one extra
-        tiny aggregation for exact per-source-file lineage; the DLQ write
-        runs only when bad rows exist."""
-        from pyspark.sql import Observation
-
-        good = self._good
-
-        obs = Observation()
-        pre_obs = flagged
-        flagged = flagged.observe(obs, *self._obs_aggs)
-        # evaluated by append_events AFTER its write job populates obs —
-        # the touched-bucket set costs nothing extra. Fallback: a
-        # driver-local batch (a LocalRelation fed straight to apply_batch
-        # — tests, backfill scripts; stream sources never produce one)
-        # can be constant-folded so the CollectMetrics node never emits,
-        # leaving the observation EMPTY (obs.get then throws); recompute
-        # the same aggs with one explicit job in that case only.
-        obs_state: dict = {}
-
-        def _obs_row():
-            if "row" not in obs_state:
-                try:
-                    obs_state["row"] = obs.get
-                except Exception:
-                    obs_state["row"] = pre_obs.agg(*self._obs_aggs).collect()[0]
-            return obs_state["row"]
-
-        touched_fn = lambda: [int(b) for b in (_obs_row()["buckets"] or [])]  # noqa: E731
-        events = flagged.filter(good)
-        if self.from_json_payload:
-            payload = events.select(*self._payload_cols)
-        else:
-            payload = events.select(
-                "seq", "op", "ts", *KEY_COLS,
-                *[c for c in events.columns if c not in ("seq", "op", "ts", *KEY_COLS, "source_file", "source_pos", "payload_json", "txn_id", "_bad", "_late")],
-            )
-        if self.salt_buckets and self.salt_buckets > 1:
+        """Merge-on-read micro-batch: the delta-file write and the
+        per-source-file aggregation run as two concurrent Spark jobs. The
+        aggregation starts on a worker thread before the write, and
+        ``append_events`` joins it through ``touched`` after its write and
+        before its commit — so a failed aggregation fails the batch with
+        nothing committed, and a failed write surfaces its own error. The
+        DLQ write runs only when bad rows exist."""
+        agg = _in_thread(lambda: self._per_file(flagged))
+        touched = lambda: _touched(agg.result())  # noqa: E731
+        payload = self._payload(flagged)
+        salted = bool(self.salt_buckets and self.salt_buckets > 1)
+        if salted:
             payload = lww_fold_salted(
                 payload, key_cols=KEY_COLS,
                 salt_buckets=self.salt_buckets, keep_deletes=True,
             )
+        try:
+            if not self.table.exists():
+                # the first commit writes the base image without asking
+                # for ``touched``: settle the aggregation before it
+                touched()
+            # raw delta append (unless salted): no batch-local fold — the
+            # read-side LWW fold / compaction reconciles duplicates, so the
+            # write is a single narrow stage (no shuffle per micro-batch)
             version = self.table.append_events(
                 payload, KEY_COLS, seq_col="seq", op_col="op",
-                batch_id=batch_id, pre_folded=True, touched=touched_fn,
+                batch_id=batch_id, pre_folded=salted, fold_mode="raw",
+                touched=touched,
             )
-        else:
-            # raw delta append: no batch-local fold — the read-side LWW
-            # fold / compaction reconciles duplicates, so the write is a
-            # single narrow stage (no shuffle at all per micro-batch)
-            version = self.table.append_events(
-                payload, KEY_COLS, seq_col="seq", op_col="op",
-                batch_id=batch_id, fold_mode="raw", touched=touched_fn,
-            )
-        # append_events always ran its write job (the replay short-circuit
-        # was pre-checked in apply_batch), so the observation is populated
-        # — or the LocalRelation fallback above recomputes it.
-        row = _obs_row()
-        n_dlq = int(row["n_bad"] or 0)
-        n_late = int(row["n_late"] or 0)
-        n_ddl = int(row["n_ddl"] or 0)
-        n_marker = int(row["n_marker"] or 0)
-        n_events = int(row["total"] or 0) - n_dlq - n_late - n_ddl - n_marker
-        metrics.update(
-            n_events=n_events, n_late=n_late, n_dlq=n_dlq, n_ddl=n_ddl,
-            version=version,
-        )
-        if n_ddl and self.table.exists():
+        except BaseException:
+            agg.exception()  # join the aggregation; the write's error wins
+            raise
+        per_file = agg.result()
+        metrics.update(_batch_counts(per_file), version=version)
+        if metrics["n_ddl"] and self.table.exists():
             # metadata-only evolve AFTER the append (additive columns:
             # this batch's delta files null-fill through the schema reader)
             ddl_cols = self._collect_ddl(flagged)
             if ddl_cols:
                 self.table.evolve(ddl_cols)
-        if n_dlq:
-            (
-                flagged.filter(F.col("_bad"))
-                .select(
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                    "payload_json",
-                    "source_file",
-                    "source_pos",
-                    F.lit("unparseable-or-missing-key").alias("reason"),
-                )
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(fsio_join(self.table_path, "_dlq"))
-            )
+        if metrics["n_dlq"]:
+            self._write_dlq(flagged, batch_id)
         if version is None:
             return metrics
-        committed_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        files = sorted(row["files"] or [])
-        if len(files) == 1:
-            lineage = [{
-                "batch_id": int(batch_id), "snapshot_id": int(version),
-                "source_file": files[0],
-                "min_pos": int(row["min_pos"]), "max_pos": int(row["max_pos"]),
-                "min_seq": int(row["min_seq"]), "max_seq": int(row["max_seq"]),
-                "n_events": n_events, "n_late": n_late,
-                "committed_at": committed_at,
-            }]
-        else:
-            # multi-file batch (e.g. full-backlog availableNow drain):
-            # per-source-file ranges need one extra aggregation
-            lineage = [
-                {
-                    "batch_id": int(batch_id), "snapshot_id": int(version),
-                    "source_file": r["source_file"],
-                    "min_pos": r["min_pos"], "max_pos": r["max_pos"],
-                    "min_seq": r["min_seq"], "max_seq": r["max_seq"],
-                    "n_events": int(r["n_events"]), "n_late": n_late,
-                    "committed_at": committed_at,
-                }
-                for r in events.groupBy("source_file").agg(
-                    F.count("*").alias("n_events"),
-                    F.min("source_pos").alias("min_pos"),
-                    F.max("source_pos").alias("max_pos"),
-                    F.min("seq").alias("min_seq"),
-                    F.max("seq").alias("max_seq"),
-                ).collect()
-            ]
-        write_lineage_rows(self.spark, lineage, self.table_path)
-        if row["mx"] is not None:
-            self._store_watermark(int(row["mx"]))
+        self._record_batch(per_file, batch_id, version, metrics)
         if self.compact_every:
             # amortized MOR-debt repayment: rewrite the unfolded buckets
             # every compact_every batches (single-writer loop, no race)

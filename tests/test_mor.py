@@ -230,9 +230,9 @@ def test_write_lineage_rows_roundtrip(spark, tmp_path):
 
 
 def test_append_mode_dlq_and_late_skip(spark, tmp_path):
-    """The fused single-job path still routes unparseable rows to the DLQ
-    and skips late events (counted, never merged) — behavior parity with
-    the two-job merge path, derived from the same observe() pass."""
+    """The append path still routes unparseable rows to the DLQ and skips
+    late events (counted, never merged) — behavior parity with the merge
+    path, derived from the same per-source-file aggregation."""
     import os
 
     feed = generate_change_feed(spark, n_conversations=20, max_turns=4, max_edits=3).cache()
