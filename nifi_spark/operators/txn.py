@@ -29,8 +29,10 @@ on ``txn_col`` once and AQE may broadcast the commit side when small.
 transactions are small — bounded by the writer's batch, not the feed),
 and the sort happens inside ``array_sort``, JVM-side, no Python.
 
-The streaming counterpart (state carried across micro-batches) is
-``streaming/stateful.py:stateful_txn_buffer``.
+The streaming counterpart (open transactions carried across
+micro-batches) is the JVM pending-store gate in
+``streaming/job.py:CdcPipeline._txn_gate``, which runs
+:func:`txn_complete_filter` over each batch plus its carryover.
 """
 
 from __future__ import annotations

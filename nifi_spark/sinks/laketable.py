@@ -67,8 +67,8 @@ table over parquet — the Iceberg model re-expressed, not a toy:
   session.py). Verified by plan assertion in tests/test_laketable.py.
 - **Merge-on-read mode**: :meth:`append_events` commits a change batch as
   flat whole-batch delta file(s) (manifest ``delta_files``) without ever
-  reading the base — O(batch) per commit, one narrow Spark stage in raw
-  mode — and records the touched buckets in ``mor_buckets``; readers
+  reading the base — O(batch) per commit, one narrow Spark stage (the
+  raw events, no batch-local fold) — and records the touched buckets in ``mor_buckets``; readers
   LWW-fold those buckets (bucket files + delta rows) so queryable state
   matches copy-on-write exactly (≙ Iceberg/Hudi MOR, Paimon LSM buckets).
   :meth:`compact_buckets` repays the read debt on a cadence, folding
@@ -320,6 +320,8 @@ class LakeTable:
         self._mcache: dict[int, dict] = {}
         self._fcache: dict[int, dict[str, list[str]]] = {}
         self._scache: dict[int, dict[str, dict]] = {}
+        # columns evolve() added before the table's first commit
+        self._staged: dict[str, T.DataType] = {}
 
     @property
     def n_buckets(self) -> int:
@@ -1367,7 +1369,16 @@ class LakeTable:
         a zero-file delta manifest (O(1) regardless of table size); the
         head's ``batch_id`` marker carries forward so replay
         short-circuits stay intact.
+
+        On a table with no commit yet the columns are staged on this
+        instance and land in the schema of its first ``merge_events`` /
+        ``append_events`` commit, so a batch that creates the table and
+        carries DDL commits both at once (returns None).
         """
+        if not self.exists():
+            self._staged.update(add_columns)
+            return None
+
         def build(head: dict | None) -> dict | None:
             if head is None:
                 raise CommitConflict(
@@ -1453,43 +1464,37 @@ class LakeTable:
         batch_id: int | None = None,
         extra_summary: dict | None = None,
         pre_folded: bool = False,
-        fold_mode: str = "bucket",
-        touched: list[int] | None = None,
+        touched: list[int] | Callable[[], list[int]] | None = None,
     ) -> int | None:
         """Fold a raw change batch to last-writer-wins per key and MERGE it —
-        one physical shuffle for fold + join + write.
-
-        ``fold_mode``:
-
-        - ``"bucket"`` (default): hash-repartition raw events on ``_bucket``
-          once; the per-key LWW fold runs inside bucket partitions
-          (``groupBy(_bucket, key)`` reuses the exchange), the merge join
-          and the partitioned file write reuse it too. Shuffle volume is
-          O(events) once. Right when events ≈ keys per batch (CDC steady
-          state) or when upstream normalization dominates.
-        - ``"prefold"``: two-phase — map-side partial LWW fold first
-          (shuffle volume O(distinct keys per mapper), the skew defense:
-          a Zipf-hot key is pre-folded to one row per map partition, see
-          operators/ordering.py), then bucket repartition of the folded
-          rows. Two shuffles, but the second moves only folded keys. Right
-          when events ≫ keys (heavy edit churn on few keys).
+        one physical shuffle for fold + join + write: raw events
+        hash-repartition on ``_bucket`` once, the per-key LWW fold runs
+        inside bucket partitions (``groupBy(_bucket, key)`` reuses the
+        exchange), and the merge join and the partitioned file write reuse
+        it too. Hot keys that need a map-side fold first go through
+        ``operators.ordering.lww_fold_salted`` and ``pre_folded=True``.
 
         Key columns must be non-null (null keys belong in the DLQ — the
         pipeline routes them there before this call).
 
-        ``touched``: the batch's distinct bucket ids, when the caller
-        already knows them (the streaming pipeline derives them in the
-        same aggregation that computes its batch metrics). Supplying it
-        removes the merge's own probe action AND the batch cache it
-        exists to amortize — one Spark job per incremental merge instead
-        of two, the difference that matters at thousands of micro-batches.
+        ``touched``: the batch's distinct bucket ids, or a zero-arg
+        callable that returns them — the streaming pipeline's settle step,
+        which joins the per-source-file aggregation that derives them. A
+        callable is resolved first, before any job; if it returns no
+        buckets the batch has no events and nothing commits. Supplying
+        ``touched`` removes the merge's own probe action AND the batch
+        cache it exists to amortize — one Spark job per incremental merge
+        instead of two, the difference that matters at thousands of
+        micro-batches.
         """
-        if events is None:
-            return None
+        if callable(touched):
+            touched = touched()
+            if not touched:
+                return None
         payload_cols = [
             c for c in events.columns if c not in (*key_cols, seq_col, op_col)
         ]
-        folded = self._fold_events(events, key_cols, seq_col, pre_folded, fold_mode)
+        folded = self._fold_events(events, key_cols, seq_col, pre_folded)
 
         if not self.exists():
             return self._commit_initial(
@@ -1510,20 +1515,13 @@ class LakeTable:
         finally:
             folded.unpersist()
 
-    def _fold_events(self, events, key_cols, seq_col, pre_folded, fold_mode):
-        """Batch-local LWW fold, bucket-aligned (see merge_events docstring
-        for the fold_mode semantics)."""
+    def _fold_events(self, events, key_cols, seq_col, pre_folded):
+        """Batch-local LWW fold inside the bucket exchange (see
+        merge_events)."""
         src = events.withColumn("_bucket", self._bucket_col(key_cols[0]))
         np = [c for c in events.columns if c not in key_cols]  # non-key incl seq/op
         if pre_folded:
             return src.repartition(self.n_buckets, F.col("_bucket"))
-        if fold_mode == "prefold":
-            return (
-                src.groupBy(*key_cols)
-                .agg(F.max_by(F.struct(*np, "_bucket"), F.col(seq_col)).alias("_w"))
-                .select(*key_cols, "_w.*")
-                .repartition(self.n_buckets, F.col("_bucket"))
-            )
         return (
             src.repartition(self.n_buckets, F.col("_bucket"))
             .groupBy("_bucket", *key_cols)
@@ -1540,7 +1538,6 @@ class LakeTable:
         batch_id: int | None = None,
         extra_summary: dict | None = None,
         pre_folded: bool = False,
-        fold_mode: str = "bucket",
         touched: list[int] | Callable[[], list[int]] | None = None,
     ) -> int | None:
         """Merge-on-read MERGE: APPEND the batch as flat whole-batch delta
@@ -1548,59 +1545,50 @@ class LakeTable:
         Paimon's LSM buckets; contrast :meth:`merge_events`, which is
         copy-on-write).
 
-        Per-batch cost is O(batch) instead of O(table), and with
-        ``fold_mode="raw"`` the write is a single NARROW Spark stage (no
-        shuffle, no per-bucket split — measured the cheapest possible
-        micro-batch shape): the read-side LWW fold reconciles in-batch
-        duplicates by seq exactly like cross-batch ones, so the batch-local
-        fold is optional. Readers reconcile via :meth:`read`, which
-        LWW-folds buckets listed in the manifest's ``mor_buckets`` over
-        bucket files + ``delta_files`` (groupBy key → max_by(_seq)), so
-        the queryable state is identical to the COW path's. Read
-        amplification is bounded by compaction (:meth:`compact_buckets` /
-        :meth:`compact`), which folds the deltas into per-bucket zstd
-        files — the streaming pipeline runs it on a cadence.
+        Per-batch cost is O(batch) instead of O(table), and the write is a
+        single NARROW Spark stage (no batch-local fold, no shuffle, no
+        per-bucket split — measured the cheapest possible micro-batch
+        shape): the read-side LWW fold reconciles in-batch duplicates by
+        seq exactly like cross-batch ones. Readers reconcile via
+        :meth:`read`, which LWW-folds buckets listed in the manifest's
+        ``mor_buckets`` over bucket files + ``delta_files`` (groupBy key →
+        max_by(_seq)), so the queryable state is identical to the COW
+        path's. Read amplification is bounded by compaction
+        (:meth:`compact_buckets` / :meth:`compact`), which folds the deltas
+        into per-bucket zstd files — the streaming pipeline runs it on a
+        cadence. The table's first commit is the BASE image (read() does
+        not fold clean buckets), so it is always folded.
 
-        ``touched`` may be a list of bucket ids, a zero-arg callable
-        evaluated after the delta write and before the commit (the
-        pipeline's join on its concurrent per-source-file aggregation),
-        or None (a tiny distinct probe over the written delta).
+        ``touched`` may be a list of bucket ids, a zero-arg callable, or
+        None (a tiny distinct probe over the written delta). A callable —
+        the pipeline's settle step, which joins its concurrent
+        per-source-file aggregation — is called exactly once on every
+        path: after the delta write and before the commit, before the
+        first commit's write, and before the replay skip and the
+        empty-delta returns.
 
         Appends NEVER conflict: a rebase just re-targets the new head's
         delta list (LWW-by-_seq makes concurrent appends and even a
         concurrent COW rewrite of the same bucket commute). Exactly-once
         replay via ``batch_id`` is identical to merge_events.
         """
-        if events is None:
-            return None
+        settle = touched if callable(touched) else (lambda: touched)
         payload_cols = [
             c for c in events.columns if c not in (*key_cols, seq_col, op_col)
         ]
         if not self.exists():
-            # the initial commit is the BASE image (read() doesn't fold
-            # clean buckets) — always fold it, even in raw mode
-            folded = self._fold_events(
-                events, key_cols, seq_col, pre_folded,
-                "bucket" if fold_mode == "raw" else fold_mode,
-            )
+            settle()
+            folded = self._fold_events(events, key_cols, seq_col, pre_folded)
             return self._commit_initial(
                 folded, key_cols, seq_col, op_col, batch_id, extra_summary, payload_cols
             )
-        if fold_mode == "raw" or pre_folded:
-            # raw mode: no batch-local fold, no shuffle — the delta write
-            # is one narrow stage (scan → flat files). Delta volume is
-            # O(events) instead of O(keys); the compaction cadence repays
-            # it. (pre_folded batches are already one row per key.)
-            folded = events.withColumn("_bucket", self._bucket_col(key_cols[0]))
-        else:
-            folded = self._fold_events(events, key_cols, seq_col, pre_folded, fold_mode)
-        head0 = self._manifest()
         if batch_id is not None:
-            last = self._batch_id_of(head0)
+            last = self._batch_id_of(self._manifest())
             if last is not None and batch_id <= last:
+                settle()
                 return None  # already applied — exactly-once on replay
 
-        delta = folded.select(
+        delta = events.withColumn("_bucket", self._bucket_col(key_cols[0])).select(
             *key_cols,
             *payload_cols,
             F.col(seq_col).cast("long").alias("_seq"),
@@ -1610,14 +1598,12 @@ class LakeTable:
         src_types = {f.name: f.dataType for f in delta.schema.fields}
         new_paths = self._write_flat(delta, f"v{uuid.uuid4().hex[:12]}")
         new_stats = self._collect_stats(new_paths)
+        # after the write, before the commit: a concurrent aggregation
+        # behind ``touched`` overlaps the write, and its failure (or the
+        # settle step's) fails the batch with nothing committed
+        touched = settle()
         if not new_paths:
             return None  # nothing survived the filter (all-late/bad batch)
-        if callable(touched):
-            # the streaming pipeline derives the touched set from an
-            # aggregation running alongside the write job above — joined
-            # here, after the write and before the commit, so its failure
-            # fails the batch with nothing committed
-            touched = touched()
         if touched is None:
             # tiny probe over the just-written delta (bounded by batch
             # size; direct-API callers only — the pipeline passes touched)
@@ -1689,7 +1675,10 @@ class LakeTable:
             (F.col(op_col) == "D").alias("_deleted"),
             "_bucket",
         )
-        schema_json = json.dumps(merged.schema.jsonValue())
+        schema = merged.schema
+        if self._staged:  # DDL evolve() saw before the table existed
+            schema = _evolve_schema(schema, list(self._staged), self._staged, key_cols)
+        schema_json = json.dumps(schema.jsonValue())
         files = self._write_partitioned(merged, f"v{uuid.uuid4().hex[:12]}")
         if not files:
             return None  # empty first batch — don't commit an empty table
@@ -1713,7 +1702,9 @@ class LakeTable:
                 "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             }
 
-        return self._commit(build)
+        version = self._commit(build)
+        self._staged.clear()
+        return version
 
     def _merge_incremental(
         self, folded, key_cols, seq_col, op_col, batch_id, extra_summary,

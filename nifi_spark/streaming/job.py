@@ -13,16 +13,23 @@ Spark restatement of the reference flow
   small state file next to the checkpoint; events older than the watermark
   route to the late count (≙ EnforceOrder wait-timeout → ``skipped``,
   reference EnforceOrder.java:205) and are excluded from the merge.
-- **fold** — salted two-phase last-writer-wins per ``(conv_id, turn_idx)``
-  (operators.ordering), keeping delete-winners as tombstone candidates.
-- **apply** — ``foreachBatch``: LakeTable.merge with the streaming
-  ``batch_id`` as the idempotent commit id. Spark may re-run a batch after
-  a sink success but before the checkpoint commit; the merge skips
-  already-applied ids, which upgrades at-least-once replay to exactly-once
-  table state (≙ PutIceberg snapshot-summary uuid check,
+- **txn gate** (``txn_consistent``) — only committed transactions'
+  events pass; open ones carry over in a checkpoint-adjacent pending
+  store (``CdcPipeline._txn_gate``).
+- **apply** — ``foreachBatch`` runs one body for both sink modes
+  (``CdcPipeline._apply``): a per-source-file aggregation runs beside
+  the sink call, and the sink settles it — counts, DDL evolve, DLQ —
+  before it commits. The sink is ``LakeTable.merge_events``
+  (copy-on-write; last-writer-wins per ``(conv_id, turn_idx)`` inside the
+  bucket shuffle, or the salted two-phase fold of operators.ordering for
+  hot keys) or ``LakeTable.append_events`` (merge-on-read delta files).
+  The streaming ``batch_id`` is the idempotent commit id: Spark may
+  re-run a batch after a sink success but before the checkpoint commit;
+  the sink skips already-applied ids, which upgrades at-least-once replay
+  to exactly-once table state (≙ PutIceberg snapshot-summary uuid check,
   reference PutIceberg.java:89-93,392-399).
 - **lineage** — per-(batch, source_file) offset-range records appended
-  under the table (lineage.py).
+  under the table after the commit (lineage.py).
 
 Every stage is DataFrame-native; the only Python in the data path is the
 optional Arrow normalization for raw-JSON feeds.
@@ -30,8 +37,8 @@ optional Arrow normalization for raw-JSON feeds.
 
 from __future__ import annotations
 
+import functools
 import json
-import os
 import sys
 import time
 from concurrent.futures import Future
@@ -42,7 +49,7 @@ from pyspark.util import InheritableThread
 
 from ..fsio import FsIO
 from ..fsio import join as fsio_join
-from ..normalize import _EVENT_JSON_SCHEMA, normalize_json
+from ..normalize import _EVENT_JSON_SCHEMA
 from ..operators.ordering import lww_fold_salted
 from ..schema import CHANGE_EVENTS, KEY_COLS
 from ..sinks.laketable import LakeTable
@@ -130,12 +137,9 @@ class CdcPipeline:
         salt_buckets: int = 0,
         watermark_delay_s: int | None = None,
         from_json_payload: bool = False,
-        fold_mode: str = "bucket",
         sink_mode: str = "merge",
         compact_every: int = 16,
         txn_consistent: bool = False,
-        txn_abandoned_ttl_ms: int | None = None,
-        txn_via_state: bool = False,
         txn_marker_keep: int = 8,
         txn_abandon_after_batches: int | None = None,
         expire_every: int = 0,
@@ -155,37 +159,34 @@ class CdcPipeline:
         (schema.CHANGE_EVENTS_TXN — every event carries ``txn_id``, the
         log contains op='C' commit markers). Only committed transactions'
         events reach the merge — CaptureChangeMySQL's BEGIN→COMMIT
-        atomicity (reference CaptureChangeMySQL.java:947-1024). Two
-        implementations:
+        atomicity (reference CaptureChangeMySQL.java:947-1024). The gate
+        is the JVM pending store in ``apply_batch`` (:meth:`_txn_gate`):
+        the batch unions the (tiny) carryover of still-open transactions
+        from the checkpoint-adjacent pending store, one broadcast join
+        against the commit set splits committed from pending, and the new
+        pending set (O(open transactions), normally ≈ the last partial
+        transaction of the batch) is rewritten. Steady-state cost: one
+        small extra write per batch, overlapped with the sink job; NO
+        per-event Python and NO full-stream stateful shuffle. Replay-safe:
+        pending generations are keyed by the producing batch id and
+        re-derived identically on replay. ``txn_marker_keep`` bounds how
+        long a commit marker waits for stragglers;
+        ``txn_abandon_after_batches`` bounds how long an open transaction
+        is held (counted in carried batches, so a replay re-derives the
+        same cut) before it routes to the DLQ.
 
-        - default (``txn_via_state=False``): JVM pending-store gate in
-          ``apply_batch`` — the batch unions the (tiny) carryover of
-          still-open transactions from the checkpoint-adjacent pending
-          store, one broadcast join against the commit set splits
-          committed from pending, and the new pending set (O(open
-          transactions), normally ≈ the last partial transaction of the
-          batch) is rewritten. Steady-state cost: one small extra write
-          per batch; NO per-event Python and NO full-stream stateful
-          shuffle. Replay-safe: pending generations are keyed by the
-          producing batch id and re-derived identically on replay.
-        - ``txn_via_state=True``: keyed stateful buffer in the streaming
-          plan (stateful.stateful_txn_buffer) — the applyInPandasWithState
-          formulation; supports ``txn_abandoned_ttl_ms`` (drop a
-          transaction with no commit after that much processing time).
-          Pays a full keyed shuffle + Arrow round-trip per batch; use
-          when per-key TTL semantics matter more than throughput.
-
-        ``sink_mode``:
+        ``sink_mode`` picks the sink call of the one apply body
+        (:meth:`_apply`):
 
         - ``"merge"`` (default): copy-on-write — every batch folds into the
           touched base buckets (LakeTable.merge_events). Per-batch cost is
           O(touched table data); reads are fold-free.
-        - ``"append"``: merge-on-read — every batch appends folded delta
-          files (LakeTable.append_events), per-batch cost O(batch) — the
-          shape a thousand-batch production stream needs; reads LWW-fold
-          the delta generations, bounded by inline partial compaction every
-          ``compact_every`` batches (bucket rewrite amortized 1/N per
-          batch, read amplification ≤ N generations).
+        - ``"append"``: merge-on-read — every batch appends its raw events
+          as delta files (LakeTable.append_events), per-batch cost
+          O(batch) — the shape a thousand-batch production stream needs;
+          reads LWW-fold the delta generations, bounded by inline partial
+          compaction every ``compact_every`` batches (bucket rewrite
+          amortized 1/N per batch, read amplification ≤ N generations).
         """
         if sink_mode not in ("merge", "append"):
             raise ValueError(f"sink_mode must be 'merge' or 'append', got {sink_mode!r}")
@@ -216,7 +217,6 @@ class CdcPipeline:
         )
         self.checkpoint_dir = checkpoint_dir
         self.salt_buckets = salt_buckets
-        self.fold_mode = fold_mode
         self.sink_mode = sink_mode
         self.compact_every = compact_every
         self._since_compact = 0
@@ -274,10 +274,7 @@ class CdcPipeline:
         self.watermark_delay_s = watermark_delay_s
         self.from_json_payload = from_json_payload
         self.txn_consistent = txn_consistent
-        self.txn_abandoned_ttl_ms = txn_abandoned_ttl_ms
-        self.txn_via_state = txn_via_state
         self.txn_marker_keep = txn_marker_keep
-        # JVM-gate analog of the stateful buffer's txn_abandoned_ttl_ms:
         # a transaction still open after N carried batches routes to the
         # DLQ with reason 'txn-abandoned' instead of being held forever
         # (by default open txns hold until commit or end-of-log — correct,
@@ -310,8 +307,8 @@ class CdcPipeline:
         # CaptureChangeMySQL.java:353-362).
         self._is_ddl = F.col("op").eqNullSafe("ddl")
         # BEGIN/COMMIT transaction markers are key-less control rows too —
-        # they must reach the txn gate/buffer, not the DLQ (the gate
-        # consumes them; they never reach the merge).
+        # they must reach the txn gate, not the DLQ (the gate consumes
+        # them; they never reach the merge).
         self._is_marker = F.col("op").isin("C", "B")
         self._bad_cond = (
             F.col("seq").isNull()
@@ -322,16 +319,16 @@ class CdcPipeline:
                 & ~self._is_marker
             )
         )
-        # markers excluded from the data path everywhere: the txn gate /
-        # buffer consumes them in txn mode, and a non-txn pipeline fed a
+        # markers excluded from the data path everywhere: the txn gate
+        # consumes them in txn mode, and a non-txn pipeline fed a
         # transaction-delimited log suppresses them (≙ CaptureChangeMySQL
         # INCLUDE_BEGIN_COMMIT=false, CaptureChangeMySQL.java:342-351)
         self._good = (
             ~F.col("_bad") & ~F.col("_late") & ~self._is_ddl & ~self._is_marker
         )
-        # the per-source-file aggregation both sink paths run once per
-        # batch: its rows are the single source of the batch counts, the
-        # lineage offset ranges, the watermark and the touched buckets
+        # the per-source-file aggregation every batch runs once: its rows
+        # are the single source of the batch counts, the lineage offset
+        # ranges, the watermark and the touched buckets
         _gw = lambda c: F.when(self._good, c)  # noqa: E731
         self._file_aggs = [
             F.count(F.lit(1)).alias("total"),
@@ -465,11 +462,9 @@ class CdcPipeline:
         - recently seen COMMIT markers, kept ``txn_marker_keep`` more
           generations so a member event arriving a batch or two AFTER its
           commit marker (bounded arrival disorder at a segment boundary)
-          still matches — the pending-store analog of the stateful
-          buffer's committed-flag straggler pass-through. Markers retire
-          after the TTL, bounding the store; a straggler later than that
-          is treated as abandoned, the same contract the buffer's
-          processing-time TTL gives.
+          still matches. Markers retire after that many batches, bounding
+          the store; a straggler later than that is held as an open
+          transaction (and expires with ``txn_abandon_after_batches``).
 
         Exactly-once under replay: the gate always consumes the newest
         generation BELOW this batch id and rewriting generation
@@ -538,18 +533,7 @@ class CdcPipeline:
                 # inside the overlapped persist job, same replay caveat as
                 # the _bad DLQ append — the apply_batch pre-check guards
                 # the committed-replay path)
-                (
-                    abandoned.select(
-                        F.lit(batch_id).cast("long").alias("batch_id"),
-                        "payload_json",
-                        "source_file",
-                        "source_pos",
-                        F.lit("txn-abandoned").alias("reason"),
-                    )
-                    .coalesce(1)
-                    .write.mode("append")
-                    .parquet(fsio_join(self.table_path, "_dlq"))
-                )
+                self._write_dlq(abandoned, batch_id, "txn-abandoned")
             if prev_path is not None:
                 consumed = int(prev_path.rsplit("b_", 1)[1])
                 for g in gens:
@@ -689,16 +673,16 @@ class CdcPipeline:
         .../standard/RetryFlowFile.java `retries_exceeded` routing;
         SURVEY.md §1.1 penalization row).
 
-        Driver-action budget per micro-batch (the fixed cost that
-        serializes a thousands-of-batches stream): TWO Spark jobs — one
-        per-source-file aggregation that yields the batch metrics, the
-        lineage offset-range records, the watermark AND the touched-bucket
-        set in a single pass, and the merge/append itself (handed the
-        touched set, so it runs no probe of its own). The merge path runs
-        the aggregation first, over a cached batch; the append path runs it
-        concurrently with its delta write. Lineage rows are already on the
-        driver and append without a job; the optional DLQ write pays only
-        when bad rows exist.
+        Spark jobs per micro-batch (the fixed cost that serializes a
+        thousands-of-batches stream): TWO — one per-source-file
+        aggregation that yields the batch metrics, the lineage offset-range
+        records, the watermark AND the touched-bucket set in a single
+        pass, and the merge/append itself (handed the touched set, so it
+        runs no probe of its own). In append mode the two run concurrently;
+        merge mode needs the touched set before it can plan, so they run
+        one after the other over a cached batch. Lineage rows are already
+        on the driver and append without a job; the DDL collect and the
+        DLQ write pay only when the batch has DDL or bad rows.
         """
         metrics = {"batch_id": batch_id, "n_events": 0, "n_late": 0, "n_dlq": 0, "n_ddl": 0, "version": None}
         # Replay pre-check, driver-only (manifest head read): a committed
@@ -732,7 +716,7 @@ class CdcPipeline:
         flagged = self._flag_batch(batch_df)
         gate_cache = None
         pending = None
-        if self.txn_consistent and not self.txn_via_state:
+        if self.txn_consistent:
             # cache the flagged batch across the gate's TWO consumers (the
             # pending-store write and the admitted side feeding the sink):
             # without it every gate job re-runs the batch scan + parse
@@ -760,11 +744,7 @@ class CdcPipeline:
                 # replay; the quality gate runs first, so a halted batch
                 # never reaches the index.
                 self._near_dup_step(flagged, batch_id, metrics)
-            if self.sink_mode == "append":
-                metrics = self._apply_batch_fused(flagged, batch_id, metrics)
-            else:
-                metrics = self._apply_batch_merge(flagged, batch_id, metrics)
-            return metrics
+            return self._apply(flagged, batch_id, metrics)
         finally:
             gate_err = pending.exception() if pending is not None else None
             if gate_cache is not None:
@@ -776,57 +756,84 @@ class CdcPipeline:
                 # itself raised, keep THAT error)
                 raise gate_err
 
-    def _apply_batch_merge(self, flagged, batch_id: int, metrics: dict) -> dict:
-        flagged = flagged.cache()
-        try:
-            per_file = self._per_file(flagged)
+    def _apply(self, flagged, batch_id: int, metrics: dict) -> dict:
+        """The micro-batch body of both sink modes:
+
+        1. start the per-source-file aggregation on a worker thread;
+        2. call the sink with ``settle`` as ``touched``. ``settle`` joins
+           the aggregation, fills the counts, evolves the schema with the
+           batch's DDL and writes the DLQ, then returns the touched
+           buckets. Every sink path calls it before it commits or returns
+           without committing, so a failure there commits nothing and the
+           replay repeats the whole batch;
+        3. after the commit: lineage and watermark, then the compaction,
+           expiry and view-refresh cadences.
+
+        A failed sink joins the aggregation before its error leaves."""
+        merge = self.sink_mode == "merge"
+        if merge:
+            # merge plans only once it has the touched buckets, so its two
+            # reads of the batch run one after the other: share one cache
+            # (append's two reads run concurrently and share nothing)
+            flagged = flagged.cache()
+        agg = _in_thread(lambda: self._per_file(flagged))
+        summary: dict = {}  # filled by settle; the sink reads it at commit
+
+        @functools.cache
+        def settle() -> list[int]:
+            per_file = agg.result()
             metrics.update(_batch_counts(per_file))
-            n_events, n_ddl = metrics["n_events"], metrics["n_ddl"]
-            ddl_cols = self._collect_ddl(flagged) if n_ddl else {}
-            if ddl_cols and self.table.exists():
-                # schema change lands BEFORE the batch's data (binlog order)
-                self.table.evolve(ddl_cols)
-                ddl_cols = {}
-            if metrics["n_dlq"]:
-                self._write_dlq(flagged, batch_id)
-            if n_events == 0:
-                if ddl_cols and self.table.exists():  # pure-DDL batch
+            summary.update(n_events=metrics["n_events"], n_late=metrics["n_late"])
+            if metrics["n_ddl"]:
+                # before the batch's data (binlog order); before the first
+                # commit the columns join that commit's schema
+                ddl_cols = self._collect_ddl(flagged)
+                if ddl_cols:
                     self.table.evolve(ddl_cols)
-                return metrics
-            touched = _touched(per_file)
-            payload = self._payload(flagged)
-            summary = {"n_events": n_events, "n_late": metrics["n_late"]}
-            # Fold strategy (see laketable.merge_events + operators/ordering):
-            # "salted" = explicit two-phase salted fold for extreme hot keys;
-            # "prefold" = map-side partial LWW fold (shuffle O(keys));
-            # "bucket" (default) = fold inside the single bucket shuffle.
-            if self.salt_buckets and self.salt_buckets > 1:
-                folded = lww_fold_salted(
-                    payload, key_cols=KEY_COLS,
-                    salt_buckets=self.salt_buckets, keep_deletes=True,
+            if metrics["n_dlq"]:
+                self._write_dlq(
+                    flagged.filter(F.col("_bad")), batch_id,
+                    "unparseable-or-missing-key",
                 )
-                version = self.table.merge_events(
-                    folded, KEY_COLS, seq_col="seq", op_col="op",
-                    batch_id=batch_id, extra_summary=summary,
-                    pre_folded=True, touched=touched,
-                )
-            else:
-                version = self.table.merge_events(
-                    payload, KEY_COLS, seq_col="seq", op_col="op",
-                    batch_id=batch_id, extra_summary=summary,
-                    fold_mode=self.fold_mode, touched=touched,
-                )
-            metrics["version"] = version
-            if ddl_cols and self.table.exists():
-                # table was created by THIS batch's merge — apply the
-                # deferred DDL now (additive, so order vs data is benign)
-                self.table.evolve(ddl_cols)
-            if version is not None:
-                self._record_batch(per_file, batch_id, version, metrics)
-                self._maybe_expire(metrics)
-                self._maybe_refresh_mv(metrics)
+            return _touched(per_file)
+
+        payload = self._payload(flagged)
+        salted = bool(self.salt_buckets and self.salt_buckets > 1)
+        if salted:
+            payload = lww_fold_salted(
+                payload, key_cols=KEY_COLS,
+                salt_buckets=self.salt_buckets, keep_deletes=True,
+            )
+        sink = self.table.merge_events if merge else self.table.append_events
+        try:
+            version = sink(
+                payload, KEY_COLS, seq_col="seq", op_col="op",
+                batch_id=batch_id, extra_summary=summary,
+                pre_folded=salted, touched=settle,
+            )
+            settle()
+        except BaseException:
+            agg.exception()  # join the aggregation; the sink's error wins
+            raise
         finally:
-            flagged.unpersist()
+            if merge:
+                flagged.unpersist()
+        metrics["version"] = version
+        if version is None:
+            return metrics
+        self._record_batch(agg.result(), batch_id, version, metrics)
+        if self.compact_every:
+            # amortized MOR-debt repayment: rewrite the unfolded buckets
+            # every compact_every batches (single-writer loop, no race)
+            self._since_compact += 1
+            if self._since_compact >= self.compact_every:
+                mor = (self.table._manifest() or {}).get("mor_buckets", [])
+                if mor:
+                    self.table.compact_buckets([int(b) for b in mor])
+                    metrics["compacted"] = len(mor)
+                self._since_compact = 0
+        self._maybe_expire(metrics)
+        self._maybe_refresh_mv(metrics)
         return metrics
 
     def _per_file(self, flagged) -> list:
@@ -843,15 +850,16 @@ class CdcPipeline:
             *[c for c in events.columns if c not in ("seq", "op", "ts", *KEY_COLS, "source_file", "source_pos", "payload_json", "txn_id", "_bad", "_late")],
         )
 
-    def _write_dlq(self, flagged, batch_id: int) -> None:
+    def _write_dlq(self, rows, batch_id: int, reason: str) -> None:
+        """Append ``rows`` to ``{table}/_dlq`` with their batch id and
+        the reason they left the data path."""
         (
-            flagged.filter(F.col("_bad"))
-            .select(
+            rows.select(
                 F.lit(batch_id).cast("long").alias("batch_id"),
                 "payload_json",
                 "source_file",
                 "source_pos",
-                F.lit("unparseable-or-missing-key").alias("reason"),
+                F.lit(reason).alias("reason"),
             )
             .coalesce(1)
             .write.mode("append")
@@ -905,66 +913,6 @@ class CdcPipeline:
             if r["text"]:
                 add.update(parse_ddl_add_columns(r["text"]))
         return add
-
-    def _apply_batch_fused(self, flagged, batch_id: int, metrics: dict) -> dict:
-        """Merge-on-read micro-batch: the delta-file write and the
-        per-source-file aggregation run as two concurrent Spark jobs. The
-        aggregation starts on a worker thread before the write, and
-        ``append_events`` joins it through ``touched`` after its write and
-        before its commit — so a failed aggregation fails the batch with
-        nothing committed, and a failed write surfaces its own error. The
-        DLQ write runs only when bad rows exist."""
-        agg = _in_thread(lambda: self._per_file(flagged))
-        touched = lambda: _touched(agg.result())  # noqa: E731
-        payload = self._payload(flagged)
-        salted = bool(self.salt_buckets and self.salt_buckets > 1)
-        if salted:
-            payload = lww_fold_salted(
-                payload, key_cols=KEY_COLS,
-                salt_buckets=self.salt_buckets, keep_deletes=True,
-            )
-        try:
-            if not self.table.exists():
-                # the first commit writes the base image without asking
-                # for ``touched``: settle the aggregation before it
-                touched()
-            # raw delta append (unless salted): no batch-local fold — the
-            # read-side LWW fold / compaction reconciles duplicates, so the
-            # write is a single narrow stage (no shuffle per micro-batch)
-            version = self.table.append_events(
-                payload, KEY_COLS, seq_col="seq", op_col="op",
-                batch_id=batch_id, pre_folded=salted, fold_mode="raw",
-                touched=touched,
-            )
-        except BaseException:
-            agg.exception()  # join the aggregation; the write's error wins
-            raise
-        per_file = agg.result()
-        metrics.update(_batch_counts(per_file), version=version)
-        if metrics["n_ddl"] and self.table.exists():
-            # metadata-only evolve AFTER the append (additive columns:
-            # this batch's delta files null-fill through the schema reader)
-            ddl_cols = self._collect_ddl(flagged)
-            if ddl_cols:
-                self.table.evolve(ddl_cols)
-        if metrics["n_dlq"]:
-            self._write_dlq(flagged, batch_id)
-        if version is None:
-            return metrics
-        self._record_batch(per_file, batch_id, version, metrics)
-        if self.compact_every:
-            # amortized MOR-debt repayment: rewrite the unfolded buckets
-            # every compact_every batches (single-writer loop, no race)
-            self._since_compact += 1
-            if self._since_compact >= self.compact_every:
-                mor = (self.table._manifest() or {}).get("mor_buckets", [])
-                if mor:
-                    self.table.compact_buckets([int(b) for b in mor])
-                    metrics["compacted"] = len(mor)
-                self._since_compact = 0
-        self._maybe_expire(metrics)
-        self._maybe_refresh_mv(metrics)
-        return metrics
 
     def _flag_batch(self, batch_df: DataFrame) -> DataFrame:
         """Parse + flag one micro-batch: payload parse (when not baked
@@ -1122,21 +1070,6 @@ class CdcPipeline:
             )
         else:
             stream = stream.withColumn("_bad", F.lit(False))
-        if self.txn_consistent and self.txn_via_state:
-            # Commit-gated admission ahead of the sink: hold each
-            # transaction's events in keyed state until its op='C' marker
-            # arrives (markers are consumed here, never emitted), so
-            # apply_batch only ever sees commit-complete data events.
-            # (The default JVM pending-store gate runs inside apply_batch
-            # instead — see _txn_gate.)
-            from .stateful import stateful_txn_buffer
-
-            stream = stateful_txn_buffer(
-                stream,
-                txn_col="txn_id",
-                op_col="op",
-                abandoned_ttl_ms=self.txn_abandoned_ttl_ms,
-            )
         if self.watermark_delay_s is None:
             stream = stream.withColumn("_late", F.lit(False))
 
@@ -1184,10 +1117,6 @@ def _cli(argv: list[str] | None = None) -> None:
     p.add_argument("--txn-consistent", action="store_true",
                    help="feed is transaction-delimited (txn_id + op='C' markers); "
                         "hold events until their transaction commits")
-    p.add_argument("--txn-abandoned-ttl-ms", type=int, default=None)
-    p.add_argument("--txn-via-state", action="store_true",
-                   help="use the keyed stateful buffer instead of the default "
-                        "JVM pending-store gate (enables abandoned-txn TTL)")
     p.add_argument("--bootstrap-from", default=None,
                    help="parquet path of a consistent snapshot image to load "
                         "before streaming (initial load -> incremental handoff)")
@@ -1287,8 +1216,6 @@ def _cli(argv: list[str] | None = None) -> None:
         sink_mode=args.sink_mode,
         compact_every=args.compact_every,
         txn_consistent=args.txn_consistent,
-        txn_abandoned_ttl_ms=args.txn_abandoned_ttl_ms,
-        txn_via_state=args.txn_via_state,
         txn_abandon_after_batches=args.txn_abandon_after_batches,
         expire_every=args.expire_every,
         expire_keep_n=args.expire_keep_n,

@@ -99,3 +99,82 @@ def test_pipeline_ddl_event_evolves_schema(spark, tmp_path, sink_mode):
     assert_final_state_equal(got, pandas_fold(feed.toPandas()))
     # the DDL row never landed in the DLQ
     assert not os.path.exists(os.path.join(p.table_path, "_dlq"))
+
+
+JSON_BATCH = "payload_json string, source_file string, source_pos long"
+BAD_ROWS = [("{not json", "binlog.bad", i) for i in range(3)]
+STATE_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+
+
+def _ddl_batches(spark):
+    """Two JSON-payload batches of one feed, each carrying events and one
+    ADD COLUMN statement; the first batch creates the table."""
+    feed = generate_change_feed(spark, n_conversations=12, max_turns=4, max_edits=2)
+    pdf = feed.toPandas()
+    cut, top = int(pdf["seq"].median()), int(pdf["seq"].max())
+    fed = with_ddl(spark, feed, [
+        (top + 1, "ALTER TABLE conversations ADD COLUMN note string"),
+        (top + 2, "ALTER TABLE conversations ADD COLUMN score bigint"),
+    ])
+    rows = fed.select("seq", "payload_json", "source_file", "source_pos").collect()
+    first = lambda r: r.seq <= cut or r.seq == top + 1  # noqa: E731
+    batches = [
+        spark.createDataFrame(
+            [tuple(r)[1:] for r in rows if first(r) == is_first], JSON_BATCH
+        )
+        for is_first in (True, False)
+    ]
+    return pdf, batches
+
+
+@pytest.mark.parametrize("case", ["merge", "append", "append_all_bad"])
+def test_evolve_failure_commits_nothing_and_replay_adds_column(
+    spark, tmp_path, monkeypatch, case
+):
+    """A raise inside ``LakeTable.evolve`` fails its batch with nothing
+    committed, in both sink modes and on the table's first commit too, so
+    a replay on a fresh pipeline adds the column and the table equals the
+    fold. An all-bad append batch, on an empty and on an existing table,
+    lands in the DLQ and commits nothing."""
+    pdf, ddl_batches = _ddl_batches(spark)
+    bad = spark.createDataFrame(BAD_ROWS, JSON_BATCH)
+    batches = [bad, *ddl_batches, bad] if case == "append_all_bad" else ddl_batches
+    table_path, ckpt = str(tmp_path / "table"), str(tmp_path / "ckpt")
+    sink_mode = "merge" if case == "merge" else "append"
+
+    def pipe():
+        return CdcPipeline(
+            spark, table_path, ckpt, n_buckets=4, sink_mode=sink_mode,
+            from_json_payload=True,
+        )
+
+    def head():
+        t = LakeTable(spark, table_path)
+        return t.current_version() if t.exists() else None
+
+    real_evolve = LakeTable.evolve
+
+    def evolve_fails_once(self, add_columns, extra_summary=None):
+        monkeypatch.setattr(LakeTable, "evolve", real_evolve)
+        raise OSError("evolve failed")
+
+    for bid, batch in enumerate(batches):
+        v_before = head()
+        if batch is bad:
+            m = pipe().apply_batch(batch, bid)
+            assert (m["version"], m["n_dlq"]) == (None, len(BAD_ROWS))
+            assert head() == v_before
+            continue
+        monkeypatch.setattr(LakeTable, "evolve", evolve_fails_once)
+        with pytest.raises(OSError, match="evolve failed"):
+            pipe().apply_batch(batch, bid)
+        assert head() == v_before
+        assert pipe().apply_batch(batch, bid)["version"] is not None
+
+    t = LakeTable(spark, table_path)
+    assert {"note", "score"} <= {f.name for f in t.schema().fields}
+    got = t.read().select(*STATE_COLS).toPandas()
+    assert_final_state_equal(got, pandas_fold(pdf))
+    if case == "append_all_bad":
+        dlq = spark.read.parquet(os.path.join(table_path, "_dlq")).collect()
+        assert sorted(r.batch_id for r in dlq) == [0] * 3 + [3] * 3

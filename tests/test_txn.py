@@ -1,4 +1,5 @@
-"""Tests: transaction-boundary semantics (batch operators + streaming buffer).
+"""Tests: transaction-boundary semantics (batch operators + the pipeline's
+JVM pending-store gate).
 
 Reference semantics under test: CaptureChangeMySQL's BEGIN→COMMIT
 transaction delimiting (CaptureChangeMySQL.java:947-1024) — a
@@ -8,10 +9,12 @@ dangling (uncommitted) transaction never does.
 
 from __future__ import annotations
 
+import datetime as dt
+
+import pytest
 from pyspark.sql import types as T
 
 from nifi_spark.operators.txn import txn_complete_filter, txn_group
-from nifi_spark.streaming.stateful import stateful_txn_buffer
 
 TXN_SCHEMA = T.StructType(
     [
@@ -70,69 +73,88 @@ def test_txn_group_orders_and_drops_open_txns(spark):
     assert g.merged == "first,second"
 
 
-def _seg(spark, tmp_path, name, rows):
-    df = spark.createDataFrame(rows, TXN_SCHEMA)
-    df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "feed" / name))
-
-
-def _drain(spark, tmp_path, qname, **buffer_kw):
-    stream = (
-        spark.readStream.schema(TXN_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "feed" / "*"))
+def _txn_event(seq, op, txn, conv=None, turn=None, text=None):
+    """One row in the CHANGE_EVENTS_TXN shape (commit/begin markers carry
+    no key)."""
+    return (
+        seq, op, dt.datetime(2024, 1, 1, 0, 0, seq), conv, turn, "user",
+        text, None, "binlog.000001", seq, None, txn,
     )
-    out = stateful_txn_buffer(stream, **buffer_kw)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {qname} ORDER BY seq").collect()
 
 
-def test_stateful_txn_buffer_holds_until_commit_across_batches(spark, tmp_path):
-    # batch 1: txn 10 data only (held), txn 20 data+commit (flows), free row
-    _seg(
-        spark, tmp_path, "b1",
+# Each case: the segments fed to apply_batch one per batch, the table
+# image ({(conv_id, turn_idx): text}) expected after each batch, and the
+# open transactions ({txn_id: n_events}) the gate holds at the end.
+GATE_CASES = {
+    # txn 10 opens in batch 0 and commits in batch 1; txn 20 and a
+    # non-transactional row apply at once
+    "cross_batch_hold": (
         [
-            (1, "U", 10, "c1", "a"),
-            (2, "U", 20, "c2", "x"),
-            (3, "C", 20, None, None),
-            (4, "U", None, "c3", "free"),
+            [
+                _txn_event(1, "U", 10, "c1", 0, "a"),
+                _txn_event(2, "U", 20, "c2", 0, "x"),
+                _txn_event(3, "C", 20),
+                _txn_event(4, "U", None, "c3", 0, "free"),
+            ],
+            [_txn_event(5, "U", 10, "c1", 1, "b"), _txn_event(6, "C", 10)],
         ],
+        [
+            {("c2", 0): "x", ("c3", 0): "free"},
+            {("c1", 0): "a", ("c1", 1): "b", ("c2", 0): "x", ("c3", 0): "free"},
+        ],
+        {},
+    ),
+    # a member event one batch after its commit marker still matches the
+    # marker the gate keeps for txn_marker_keep batches
+    "straggler_after_commit": (
+        [
+            [_txn_event(1, "U", 10, "c1", 0, "a"), _txn_event(2, "C", 10)],
+            [_txn_event(3, "U", 10, "c1", 1, "late")],
+        ],
+        [{("c1", 0): "a"}, {("c1", 0): "a", ("c1", 1): "late"}],
+        {},
+    ),
+    # transactions that never commit never apply
+    "dangling_never_applies": (
+        [
+            [_txn_event(1, "U", 10, "c1", 0, "a"), _txn_event(2, "B", 11)],
+            [_txn_event(3, "U", 11, "c2", 0, "also-open")],
+        ],
+        [{}, {}],
+        {10: 1, 11: 1},
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(GATE_CASES))
+def test_jvm_gate_admits_only_committed_transactions(spark, tmp_path, case):
+    """The pending-store gate, batch by batch: open transactions carry
+    over until their commit marker arrives, a straggler of a recently
+    committed transaction passes, and a dangling one stays pending."""
+    from nifi_spark.schema import CHANGE_EVENTS_TXN
+    from nifi_spark.streaming.job import CdcPipeline
+
+    segments, expected, open_txns = GATE_CASES[case]
+    p = CdcPipeline(
+        spark, str(tmp_path / "table"), str(tmp_path / "ckpt"),
+        n_buckets=4, txn_consistent=True,
     )
-    # batch 2: more txn 10 data + its commit → everything flushes
-    _seg(
-        spark, tmp_path, "b2",
-        [(5, "U", 10, "c1", "b"), (6, "C", 10, None, None)],
-    )
-    rows = _drain(spark, tmp_path, "txn_cross_batch")
-    assert [(r.seq, r.text) for r in rows] == [
-        (1, "a"), (2, "x"), (4, "free"), (5, "b")
-    ]
-    assert all(r.op == "U" for r in rows)  # boundary rows consumed
+    for bid, (rows, want) in enumerate(zip(segments, expected)):
+        p.apply_batch(spark.createDataFrame(rows, CHANGE_EVENTS_TXN), bid)
+        got = (
+            {(r.conv_id, r.turn_idx): r.text for r in p.table.read().collect()}
+            if p.table.exists()
+            else {}
+        )
+        assert got == want, f"batch {bid}"
+    report = {r.txn_id: r.n_events for r in p.pending_report().collect()}
+    assert report == open_txns
 
 
-def test_stateful_txn_buffer_straggler_after_commit_passes(spark, tmp_path):
-    _seg(spark, tmp_path, "b1", [(1, "U", 10, "c1", "a"), (2, "C", 10, None, None)])
-    # replay-overlap straggler for the already-committed txn 10
-    _seg(spark, tmp_path, "b2", [(3, "U", 10, "c1", "late")])
-    rows = _drain(spark, tmp_path, "txn_straggler")
-    assert [(r.seq, r.text) for r in rows] == [(1, "a"), (3, "late")]
-
-
-import pytest
-
-
-@pytest.mark.parametrize("via_state", [False, True], ids=["jvm-gate", "stateful"])
-def test_pipeline_txn_consistent_end_to_end(spark, tmp_path, via_state):
+def test_pipeline_txn_consistent_end_to_end(spark, tmp_path):
     """Full CDC replay with transaction-delimited feed: only committed
     transactions' events reach the table (dangling ones never apply),
-    holding works across micro-batches, and replay stays idempotent —
-    under BOTH implementations (JVM pending-store gate / stateful buffer)."""
+    holding works across micro-batches, and replay stays idempotent."""
     from nifi_spark.feedgen import (
         generate_change_feed,
         materialize_feed,
@@ -149,7 +171,7 @@ def test_pipeline_txn_consistent_end_to_end(spark, tmp_path, via_state):
 
     p = CdcPipeline(
         spark, str(tmp_path / "table"), str(tmp_path / "ckpt"),
-        n_buckets=8, txn_consistent=True, txn_via_state=via_state,
+        n_buckets=8, txn_consistent=True,
     )
     q = p.start(feed_dir, max_files_per_trigger=1, available_now=True)
     q.awaitTermination()
@@ -173,15 +195,14 @@ def test_pipeline_txn_consistent_end_to_end(spark, tmp_path, via_state):
     v = p.table.current_version()
     p2 = CdcPipeline(
         spark, str(tmp_path / "table"), str(tmp_path / "ckpt"),
-        n_buckets=8, txn_consistent=True, txn_via_state=via_state,
+        n_buckets=8, txn_consistent=True,
     )
     q2 = p2.start(feed_dir, max_files_per_trigger=1, available_now=True)
     q2.awaitTermination()
     assert p2.table.current_version() == v
 
 
-@pytest.mark.parametrize("via_state", [False, True], ids=["jvm-gate", "stateful"])
-def test_pipeline_txn_consistent_json_payload(spark, tmp_path, via_state):
+def test_pipeline_txn_consistent_json_payload(spark, tmp_path):
     """Same scenario through the raw-JSON normalization path: commit
     markers classify via their payload and are consumed by the gate."""
     from nifi_spark.feedgen import (
@@ -201,7 +222,6 @@ def test_pipeline_txn_consistent_json_payload(spark, tmp_path, via_state):
     p = CdcPipeline(
         spark, str(tmp_path / "table"), str(tmp_path / "ckpt"),
         n_buckets=8, txn_consistent=True, from_json_payload=True,
-        txn_via_state=via_state,
     )
     q = p.start(feed_dir, max_files_per_trigger=1, available_now=True)
     q.awaitTermination()
@@ -214,13 +234,6 @@ def test_pipeline_txn_consistent_json_payload(spark, tmp_path, via_state):
         .toPandas()
     )
     assert_final_state_equal(got, pandas_fold(committed))
-
-
-def test_stateful_txn_buffer_dangling_txn_never_emits(spark, tmp_path):
-    _seg(spark, tmp_path, "b1", [(1, "U", 10, "c1", "a"), (2, "B", 11, None, None)])
-    _seg(spark, tmp_path, "b2", [(3, "U", 11, "c2", "also-open")])
-    rows = _drain(spark, tmp_path, "txn_dangling")
-    assert rows == []
 
 
 def test_jvm_gate_empty_generation_is_skipped(spark, tmp_path):
